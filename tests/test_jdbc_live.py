@@ -185,3 +185,42 @@ def test_submit_to_sink_roundtrip(spark, derby_url, seeded, events_small):
     got_rows = sorted(map(tuple, back.collect()))
     want_rows = sorted(map(tuple, want.collect()))
     assert got_rows == want_rows and len(got_rows) == 3
+
+
+def test_runner_jdbc_sink_counts_rows_written(spark, derby_url, seeded, tmp_path):
+    """The runner's declared JDBC sink reports rowsWritten from the
+    write itself: alone, and beside a parquet sink on the cached plan,
+    the count equals the rows the sink table holds."""
+    run = make_spark_runner(spark)
+    base = {
+        "source": {
+            "jdbcUrl": derby_url,
+            "query": "SELECT * FROM events_src",
+            "driverName": DRIVER,
+            "datetimeField": "ts",
+            "partitionFields": ["user_id"],
+        },
+        "patterns": [{"id": 7, "sourceCode": "value > 150 for 10 sec"}],
+    }
+
+    def table_rows(table):
+        return (
+            spark.read.format("jdbc")
+            .option("url", derby_url)
+            .option("driver", DRIVER)
+            .option("query", f"SELECT * FROM {table}")
+            .load()
+            .count()
+        )
+
+    def sink(table):
+        return {"jdbcUrl": derby_url, "tableName": table, "driverName": DRIVER}
+
+    assert run({"uuid": "obs-1", **base, "sinks": [sink("obs_one")]}) == 3
+    assert table_rows("obs_one") == 3
+
+    pq = tmp_path / "beside"
+    both = [sink("obs_two"), {"parquetPath": str(pq)}]
+    assert run({"uuid": "obs-2", **base, "sinks": both}) == 3
+    assert table_rows("obs_two") == 3
+    assert spark.read.parquet(str(pq)).count() == 3

@@ -601,3 +601,253 @@ def test_overview_surfaces_probe_decision_age(spark, tmp_path, monkeypatch):
     finally:
         service.shutdown()
         api.clear_auto_probe_cache()
+
+
+def _wait_status(service, uid, timeout=60):
+    deadline = time.time() + timeout
+    while service.status(uid)["status"] not in ("finished", "failed", "stopped"):
+        assert time.time() < deadline, service.status(uid)
+        time.sleep(0.02)
+    return service.status(uid)
+
+
+def test_idle_service_starts_submit_at_once():
+    """A worker idle for longer than the dequeue interval starts a new
+    job on submit, without waiting out another interval."""
+    import threading
+
+    started = threading.Event()
+    service = JobQueueService(lambda req: started.set() or 0,
+                              dequeue_interval_s=1.0)
+    try:
+        time.sleep(1.2)
+        t0 = time.monotonic()
+        service.submit({"uuid": "now"})
+        assert started.wait(timeout=5)
+        # well inside the 1 s interval a sleep-poll would have waited
+        assert time.monotonic() - t0 < 0.5
+    finally:
+        service.shutdown()
+
+
+def test_queued_jobs_start_an_interval_apart():
+    """The reference's rate holds under a backlog: at most one job
+    starts per dequeue interval, counted from construction for the
+    first."""
+    interval = 0.3
+    starts: list[float] = []
+    t_built = time.monotonic()
+    service = JobQueueService(lambda req: starts.append(time.monotonic()) or 0,
+                              dequeue_interval_s=interval)
+    try:
+        service.submit({"uuid": "a"})
+        service.submit({"uuid": "b"})
+        _wait_status(service, "b", timeout=10)
+        # 10 ms covers the runner recording its start a moment after
+        # the dequeue it measures
+        assert starts[0] - t_built >= interval - 0.01
+        assert starts[1] - starts[0] >= interval - 0.01
+    finally:
+        service.shutdown()
+
+
+def test_finished_status_always_carries_rows_written(monkeypatch):
+    """rowsWritten is set before the terminal status: a status read
+    racing the worker never sees 'finished' without it."""
+    import threading
+
+    from tsp_spark.service import Job
+
+    def slow_finish(job, name, value):
+        object.__setattr__(job, name, value)
+        if name == "status" and value == "finished":
+            # hold the worker right after the status write, so a
+            # poller lands behind it if the fields are published in
+            # the wrong order
+            time.sleep(0.002)
+
+    monkeypatch.setattr(Job, "__setattr__", slow_finish)
+    service = JobQueueService(lambda req: 5, dequeue_interval_s=0)
+    uids = [f"r{i}" for i in range(100)]
+    bad: list[dict] = []
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            for uid in uids:
+                st = service.status(uid)
+                if st and st["status"] == "finished" and "rowsWritten" not in st:
+                    bad.append(st)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        for uid in uids:
+            service.submit({"uuid": uid})
+        _wait_status(service, uids[-1], timeout=30)
+    finally:
+        done.set()
+        poller.join()
+        service.shutdown()
+    assert bad == []
+    assert all(service.status(u)["rowsWritten"] == 5 for u in uids)
+
+
+def test_overview_safe_under_concurrent_submits():
+    """/jobs/overview, status and request reads snapshot under the
+    queue lock; iterating the job table while submit() inserted raised
+    'OrderedDict mutated during iteration'."""
+    import threading
+
+    service = JobQueueService(lambda req: 0, dequeue_interval_s=60)
+    app = make_wsgi_app(service)
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def submitter(tag):
+        try:
+            for i in range(1500):
+                service.submit({"uuid": f"{tag}-{i}", "priority": i % 3})
+        except BaseException as e:  # noqa: BLE001
+            errors.append(e)
+
+    def reader():
+        try:
+            while not done.is_set():
+                code, ov = wsgi_call(app, "GET", "/jobs/overview")
+                assert code == "200 OK", ov
+                for brief in ov[-3:]:
+                    service.status(brief["uuid"])
+                    service.request_of(brief["uuid"])
+        except BaseException as e:  # noqa: BLE001
+            errors.append(e)
+
+    writers = [threading.Thread(target=submitter, args=(t,)) for t in "abc"]
+    readers = [threading.Thread(target=reader) for _ in range(2)]
+    try:
+        for t in readers + writers:
+            t.start()
+        for t in writers:
+            t.join()
+    finally:
+        done.set()
+        for t in readers:
+            t.join()
+        service.shutdown()
+    assert errors == []
+    assert len(service.overview()) == 4500
+
+
+def test_shutdown_stops_worker_and_register_threads_promptly():
+    """shutdown() wakes the worker out of a long dequeue interval and
+    the register loop out of its heartbeat wait, then joins both."""
+    import threading
+    from wsgiref.simple_server import make_server
+
+    from tsp_spark.service import CoordinatorClient
+
+    def coord_app(environ, start_response):
+        start_response("200 OK", [("Content-Type", "application/json")])
+        return [b"{}"]
+
+    httpd = make_server("127.0.0.1", 0, coord_app)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    try:
+        coord = CoordinatorClient(f"http://127.0.0.1:{httpd.server_address[1]}",
+                                  register_interval_s=60)
+        service = JobQueueService(lambda req: 0, dequeue_interval_s=60,
+                                  coordinator=coord)
+        service.submit({"uuid": "waits"})  # worker in a timed wait
+        time.sleep(0.2)
+        t0 = time.monotonic()
+        service.shutdown()
+        assert time.monotonic() - t0 < 1.0
+        assert not service._worker.is_alive()
+        assert not service._register_thread.is_alive()
+        assert service.status("waits")["status"] == "queued"
+    finally:
+        httpd.shutdown()
+
+
+def _parquet_job(src, sinks, source_code="value > 150 for 10 sec"):
+    return {
+        "source": {
+            "parquetPath": str(src),
+            "datetimeField": "ts",
+            "partitionFields": ["user_id"],
+        },
+        "patterns": [{"id": 1, "sourceCode": source_code}],
+        "sinks": [{"parquetPath": str(s)} for s in sinks],
+    }
+
+
+def test_rows_written_counted_in_the_sink_pass(spark, events_small, tmp_path,
+                                              monkeypatch):
+    """rowsWritten comes from an observation on the sink write, not a
+    second action: it equals the sink's rows, is 0 on a job with no
+    incidents, and two sinks get the same rows without any count()."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    src = tmp_path / "events"
+    events_small.write.parquet(str(src))
+    run = make_spark_runner(spark)
+
+    one = tmp_path / "one"
+    rows = run({"uuid": "s1", **_parquet_job(src, [one])})
+    assert rows > 0
+    assert rows == spark.read.parquet(str(one)).count()
+
+    empty = tmp_path / "empty"
+    assert run({"uuid": "s0", **_parquet_job(src, [empty], "value > 100000")}) == 0
+
+    def no_count(self):
+        raise AssertionError("the runner must not call DataFrame.count")
+
+    a, b = tmp_path / "a", tmp_path / "b"
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "count", no_count)
+        rows2 = run({"uuid": "s2", **_parquet_job(src, [a, b])})
+    assert rows2 == rows
+    got_a = sorted(map(tuple, spark.read.parquet(str(a)).collect()))
+    got_b = sorted(map(tuple, spark.read.parquet(str(b)).collect()))
+    assert got_a == got_b and len(got_a) == rows
+
+
+def test_kafka_only_sinks_count_without_the_observation(spark, events_small,
+                                                        tmp_path, monkeypatch):
+    """Kafka's writer runs the plan's RDD outside a tracked action, which
+    never completes an observation; a job whose only sinks are Kafka
+    still returns rowsWritten instead of waiting on one forever, and a
+    parquet sink beside it supplies the count."""
+    import threading
+
+    import tsp_spark.io.kafka as kafka
+
+    produced: list = []
+
+    def rdd_only_kafka_sink(df, conf):
+        # the shape of KafkaWriter: an RDD pass over the encoded rows
+        produced.extend(kafka.encode_json_row(df).rdd.collect())
+
+    monkeypatch.setattr(kafka, "kafka_sink", rdd_only_kafka_sink)
+    src = tmp_path / "events"
+    events_small.write.parquet(str(src))
+    run = make_spark_runner(spark)
+    topic = {"brokers": "localhost:9092", "topic": "incidents"}
+
+    def run_bounded(request):
+        out: list = []
+        t = threading.Thread(target=lambda: out.append(run(request)), daemon=True)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive(), "runner blocked on an observation"
+        return out[0]
+
+    only = {**_parquet_job(src, []), "sinks": [topic]}
+    rows = run_bounded({"uuid": "k1", **only})
+    assert rows == len(produced) == 3
+
+    pq = tmp_path / "beside"
+    both = {**_parquet_job(src, [pq]), "sinks": [topic, {"parquetPath": str(pq)}]}
+    assert run_bounded({"uuid": "k2", **both}) == 3
+    assert spark.read.parquet(str(pq)).count() == 3

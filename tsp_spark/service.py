@@ -15,8 +15,10 @@ semantics from services/queuing/JobRunService.scala:34-259):
     POST /patterns/validate     — parse/validate patterns without running
     GET  /metainfo/getVersion   — engine version
 
-FIFO queue with a 1 Hz dequeue worker (JobRunService.scala:240-244).
-Framework-free: a WSGI app over stdlib, so it runs under wsgiref or any
+Priority-then-FIFO queue with one worker that starts at most one job per
+dequeue interval (the reference's 1 job/s rate, JobRunService.scala:240-244)
+and sleeps until a submit wakes it, so an idle service starts a job at
+once. Framework-free: a WSGI app over stdlib, so it runs under wsgiref or any
 WSGI server; the service object is also directly usable in-process.
 """
 
@@ -33,6 +35,9 @@ import uuid as uuidlib
 from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any, Callable
+
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 from tsp_spark import __version__ as ENGINE_VERSION
 from tsp_spark.api import RawPattern, search_incidents
@@ -139,12 +144,17 @@ class Job:
 
 
 class JobQueueService:
-    """Priority-then-FIFO queue, one dequeue per second, at most one
-    running job — the reference's JobRunService behavior plus the
-    `priority` ordering its QueueableRequest declares
-    (http/.../domain/input/Request.scala:10-13: requests are Ordered by
-    priority; higher value runs first, equal priorities keep submit
-    order)."""
+    """Priority-then-FIFO queue, at most one running job — the
+    reference's JobRunService behavior plus the `priority` ordering its
+    QueueableRequest declares (http/.../domain/input/Request.scala:10-13:
+    requests are Ordered by priority; higher value runs first, equal
+    priorities keep submit order).
+
+    The worker sleeps on a condition variable until the queue is
+    non-empty, then starts the head job no sooner than
+    ``dequeue_interval_s`` after the previous start (counted from
+    construction for the first job): the reference's one-job-per-second
+    rate as a minimum spacing between starts."""
 
     def __init__(
         self,
@@ -157,11 +167,16 @@ class JobQueueService:
         self._jobs: OrderedDict[str, Job] = OrderedDict()
         self._queue: list[str] = []
         self._lock = threading.Lock()
+        # signalled by submit() and shutdown(); removing a queued job
+        # never lets another start sooner
+        self._wake = threading.Condition(self._lock)
+        self._last_start = time.monotonic()
+        self._closed = threading.Event()
         self._stop_flags: set[str] = set()
         self._coordinator = coordinator
         self._worker = threading.Thread(target=self._run_loop, daemon=True)
-        self._shutdown = False
         self._worker.start()
+        self._register_thread = None
         if coordinator is not None:
             self._register_thread = threading.Thread(
                 target=self._register_loop, daemon=True
@@ -195,6 +210,7 @@ class JobQueueService:
                     pos = i
                     break
             self._queue.insert(pos, uid)
+            self._wake.notify()
         return {"uuid": uid, "status": "queued", "priority": priority}
 
     def queue_show(self) -> list[dict]:
@@ -209,21 +225,26 @@ class JobQueueService:
                 return True
         return False
 
+    # reads take the lock too: submit() inserts into _jobs from other
+    # request threads, and iterating it meanwhile raises
     def status(self, uid: str) -> dict | None:
-        job = self._jobs.get(uid)
-        return None if job is None else self._brief(job)
+        with self._lock:
+            job = self._jobs.get(uid)
+            return None if job is None else self._brief(job)
 
     def request_of(self, uid: str) -> dict | None:
-        job = self._jobs.get(uid)
-        if job is None:
-            return None
+        with self._lock:
+            job = self._jobs.get(uid)
+            if job is None:
+                return None
+            # one C-level copy, so the runner's concurrent _autoShard
+            # insert cannot land mid-iteration
+            request = dict(job.request)
         # strip only the KNOWN runner-internal keys so the request
         # endpoint round-trips exactly what the client sent — a client
         # field that happens to start with "_" must still echo back
         # (r13, ADVICE r12)
-        return {
-            k: v for k, v in job.request.items() if k not in _INTERNAL_REQUEST_KEYS
-        }
+        return {k: v for k, v in request.items() if k not in _INTERNAL_REQUEST_KEYS}
 
     def stop(self, uid: str) -> bool:
         with self._lock:
@@ -250,10 +271,18 @@ class JobQueueService:
         return False
 
     def overview(self) -> list[dict]:
-        return [self._brief(j) for j in self._jobs.values()]
+        with self._lock:
+            return [self._brief(j) for j in self._jobs.values()]
 
     def shutdown(self) -> None:
-        self._shutdown = True
+        """Wake both threads and wait for them; a running job finishes
+        first."""
+        with self._wake:
+            self._closed.set()
+            self._wake.notify()
+        self._worker.join()
+        if self._register_thread is not None:
+            self._register_thread.join()
 
     def stop_requested(self, uid: str) -> bool:
         return uid in self._stop_flags
@@ -263,44 +292,60 @@ class JobQueueService:
         """Periodic coordinator registration (CoordinatorService.scala:46:
         scheduleAtFixedRate; first beat immediate so tests and fresh
         instances surface promptly)."""
-        while not self._shutdown:
+        while not self._closed.is_set():
             self._coordinator.notify_register()
-            time.sleep(self._coordinator.register_interval_s)
+            self._closed.wait(self._coordinator.register_interval_s)
+
+    def _next_job(self) -> Job | None:
+        """Block until the head of the queue may start — at most one
+        start per dequeue interval — and mark it running; None once
+        shut down."""
+        with self._wake:
+            while not self._closed.is_set():
+                if not self._queue:
+                    self._wake.wait()
+                    continue
+                delay = self._last_start + self._interval - time.monotonic()
+                if delay > 0:
+                    self._wake.wait(delay)
+                    continue
+                self._last_start = time.monotonic()
+                job = self._jobs[self._queue.pop(0)]
+                job.status = "running"
+                return job
+        return None
 
     def _run_loop(self) -> None:
-        while not self._shutdown:
-            time.sleep(self._interval)
-            with self._lock:
-                uid = self._queue.pop(0) if self._queue else None
-                if uid is not None:
-                    self._jobs[uid].status = "running"
-            if uid is None:
-                continue
-            job = self._jobs[uid]
+        while (job := self._next_job()) is not None:
+            uid = job.uuid
             if self._coordinator is not None:
                 self._coordinator.notify_job_started(uid)
+            result = error = None
             try:
                 result = self._runner(job.request)
-                if uid in self._stop_flags:
+            except Exception as e:  # noqa: BLE001 — report any job failure
+                error = e
+            with self._lock:
+                # a cancelled Spark job group surfaces as an exception
+                # in the runner — that's a successful stop, not a
+                # failure (review-caught). Always clear the flag:
+                # leaving it leaked the set and kept stop_requested(uid)
+                # true forever (review-caught)
+                stopped = uid in self._stop_flags
+                self._stop_flags.discard(uid)
+                # result fields before the terminal status, so a status
+                # read never sees 'finished' without rowsWritten
+                if stopped:
                     job.status = "stopped"
+                elif error is not None:
+                    job.error = f"{type(error).__name__}: {error}"
+                    job.status = "failed"
                 else:
-                    job.status = "finished"
                     if isinstance(result, int):
                         job.rows_written = result
-            except Exception as e:  # noqa: BLE001 — report any job failure
-                if uid in self._stop_flags:
-                    # a cancelled Spark job group surfaces as an
-                    # exception in the runner — that's a successful
-                    # stop, not a failure (review-caught)
-                    job.status = "stopped"
-                else:
-                    job.status = "failed"
-                    job.error = f"{type(e).__name__}: {e}"
-                    traceback.print_exc()
-            finally:
-                # always clear the flag: leaving it leaked the set and
-                # kept stop_requested(uid) true forever (review-caught)
-                self._stop_flags.discard(uid)
+                    job.status = "finished"
+            if job.status == "failed":
+                traceback.print_exception(error)
             if self._coordinator is not None:
                 self._coordinator.notify_job_completed(
                     uid,
@@ -413,10 +458,20 @@ def make_spark_runner(spark, sink: Callable[[Any, dict], int] | None = None) -> 
         if sink is not None:
             return sink(incidents, request)
         outs = request.get("sinks", [])
-        # compute the incident plan ONCE: each sink write plus the
-        # count() used to re-run the full search per action
-        # (review-caught)
-        if outs:
+        # rowsWritten is counted as rows flow into a sink, so no action
+        # after the writes re-reads the plan. The observation completes
+        # on parquet and JDBC writes (tests pin both); Kafka's writer
+        # runs its RDD outside a tracked action and may never complete
+        # it, and Observation.get waits unbounded — so a job with no
+        # parquet or JDBC sink counts with its own action after the writes.
+        observed = any("parquetPath" in o or "jdbcUrl" in o for o in outs)
+        if observed:
+            written = Observation()
+            incidents = incidents.observe(written, F.count(F.lit(1)).alias("n"))
+        # compute the incident plan ONCE when a second action reads it,
+        # rather than re-running the search per action (review-caught)
+        shared = len(outs) + (not observed) > 1
+        if shared:
             incidents = incidents.persist()
         try:
             for out in outs:
@@ -456,9 +511,9 @@ def make_spark_runner(spark, sink: Callable[[Any, dict], int] | None = None) -> 
                         f"unsupported sink conf (expected parquetPath, "
                         f"jdbcUrl or brokers): {sorted(out)}"
                     )
-            return incidents.count()
+            return written.get["n"] if observed else incidents.count()
         finally:
-            if outs:
+            if shared:
                 incidents.unpersist()
 
     def run_grouped(request: dict) -> int:
