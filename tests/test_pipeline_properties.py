@@ -187,6 +187,37 @@ def test_jaccard_bucket_guard_fails_fast(spark):
     assert sorted(map(tuple, ok.collect())) == sorted(map(tuple, off.collect()))
 
 
+def _jaccard_brute_force(texts, threshold):
+    """(i, j) pairs, i < j, of the texts (doc id = list index) whose
+    whitespace token sets have Jaccard ≥ threshold."""
+    want = set()
+    sets = [set(t.split(" ")) for t in texts]
+    for i in range(len(sets)):
+        for j in range(i + 1, len(sets)):
+            union = len(sets[i] | sets[j])
+            if union and len(sets[i] & sets[j]) / union >= threshold:
+                want.add((i, j))
+    return want
+
+
+def _simhash_brute_force(df, bits, max_hamming):
+    """{(id_a, id_b): hamming} over all doc pairs of ``df`` whose
+    ``simhash`` fingerprints differ in ≤ max_hamming bits."""
+    import itertools
+
+    from tsp_spark.pipeline.text import simhash
+
+    sh = {
+        r["doc_id"]: r["simhash"]
+        for r in simhash(df, "text", "doc_id", bits=bits).collect()
+    }
+    return {
+        (a, b): bin(sh[a] ^ sh[b]).count("1")
+        for a, b in itertools.combinations(sorted(sh), 2)
+        if bin(sh[a] ^ sh[b]).count("1") <= max_hamming
+    }
+
+
 @settings(
     max_examples=15,
     deadline=None,
@@ -221,14 +252,7 @@ def test_jaccard_pairs_match_brute_force(spark, docs, threshold, strat):
             strategy="prefix" if strat == "prefix" else "allpairs",
         ).collect()
     }
-    want = set()
-    sets = [set(t.split(" ")) for t in texts]
-    for i in range(len(sets)):
-        for j in range(i + 1, len(sets)):
-            union = len(sets[i] | sets[j])
-            if union and len(sets[i] & sets[j]) / union >= threshold:
-                want.add((i, j))
-    assert got == want
+    assert got == _jaccard_brute_force(texts, threshold)
 
 
 def test_minhash_band_bucket_guard(spark):
@@ -300,10 +324,7 @@ def test_simhash_pairs_match_brute_force(spark):
     """r8: the banded SimHash join must return EXACTLY the brute-force
     Hamming ≤ k pair set (pigeonhole: k < bands guarantees a shared
     band), and the parameter guards enforce the recall precondition."""
-    import itertools
-
     from tsp_spark.pipeline.dedup import simhash_pairs
-    from tsp_spark.pipeline.text import simhash
 
     rows = [
         (0, "alpha beta gamma delta epsilon zeta"),
@@ -321,21 +342,130 @@ def test_simhash_pairs_match_brute_force(spark):
             df, "text", "doc_id", bits=32, bands=4, max_hamming=3
         ).collect()
     }
-    sh = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash(df, "text", "doc_id", bits=32).collect()
-    }
-    want = {
-        (a, b): bin(sh[a] ^ sh[b]).count("1")
-        for a, b in itertools.combinations(sorted(sh), 2)
-        if bin(sh[a] ^ sh[b]).count("1") <= 3
-    }
-    assert got == want
+    assert got == _simhash_brute_force(df, bits=32, max_hamming=3)
     assert got[(0, 1)] == 0  # exact dup → identical fingerprints
     with pytest.raises(ValueError, match="pigeonhole"):
         simhash_pairs(df, "text", "doc_id", bits=32, bands=4, max_hamming=4)
     with pytest.raises(ValueError, match="divide"):
         simhash_pairs(df, "text", "doc_id", bits=32, bands=5)
+
+
+def test_neardup_operators_read_source_as_scanned(spark, tmp_path, monkeypatch):
+    """The near-dup operators work on their input's partitions as
+    scanned: a one-file source that scans as ONE partition reaches every
+    eager localCheckpoint with no round-robin reshuffle in its plan —
+    batch jaccard, MinHash-LSH and SimHash, the streaming micro-batch
+    path and text_fingerprint's shared docs base — and every result
+    still equals its brute-force or DuckDB reference."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from tsp_spark.pipeline.dedup import (
+        _neardup_process_batch,
+        jaccard_pairs,
+        minhash_lsh_pairs,
+        simhash_pairs,
+    )
+    from tsp_spark.queries import ORACLES, QUERIES, _load
+
+    # 30 docs over a 60-word vocabulary (random pairs sit far below every
+    # threshold) plus an exact copy and a one-word edit
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(60)]
+    texts = [
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(10, 20)))
+        for _ in range(30)
+    ]
+    texts[7] = texts[2]
+    edited = texts[4].split(" ")
+    edited[3] = "edited"
+    texts[11] = " ".join(edited)
+    docs_file = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": texts,
+            "source": ["s"] * len(texts),
+        }),
+        docs_file,
+    )
+    src = _load(spark, str(tmp_path), "documents")
+    assert src.rdd.getNumPartitions() == 1
+
+    plans = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs_file}')")
+
+    def oracle_rows(name):
+        return sorted(con.execute(ORACLES[name]).fetchall())
+
+    def checked(op, run):
+        """Run one operator; its checkpointed plans must not reshuffle."""
+        n0 = len(plans)
+        out = run()
+        assert len(plans) > n0, f"{op}: no localCheckpoint recorded"
+        for plan in plans[n0:]:
+            assert "RoundRobinPartitioning" not in plan, f"{op}:\n{plan}"
+        return out
+
+    got = checked("jaccard_pairs", lambda: {
+        (r["id_a"], r["id_b"])
+        for r in jaccard_pairs(
+            src, "text", "doc_id", ["source"], threshold=0.6
+        ).collect()
+    })
+    assert (2, 7) in got and (4, 11) in got
+    assert got == _jaccard_brute_force(texts, 0.6)
+
+    got = checked("minhash_lsh_pairs", lambda: sorted(
+        tuple(r) for r in minhash_lsh_pairs(
+            src, "text", "doc_id", threshold=0.5
+        ).collect()
+    ))
+    minhash = oracle_rows("dedup_minhash_lsh")
+    assert (2, 7, 1.0) in got
+    assert got == minhash
+
+    got = checked("simhash_pairs", lambda: {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in simhash_pairs(
+            src, "text", "doc_id", bits=32, bands=4, max_hamming=3
+        ).collect()
+    })
+    assert got[(2, 7)] == 0
+    assert got == _simhash_brute_force(src, bits=32, max_hamming=3)
+
+    # the first micro-batch (empty index) drops the larger id of every
+    # verified MinHash pair, the same pairs the batch operator returns
+    out = tmp_path / "admitted"
+
+    def stream_batch():
+        _neardup_process_batch(
+            spark, src, 0, text_col="text", id_col="doc_id",
+            index_dir=str(tmp_path / "index"), out_dir=str(out),
+            num_perm=32, bands=8, shingle_k=3, threshold=0.5, seed=42,
+        )
+        return {r["doc_id"] for r in spark.read.parquet(f"{out}/*").collect()}
+
+    admitted = checked("_neardup_process_batch", stream_batch)
+    assert admitted == set(range(len(texts))) - {b for _, b, _ in minhash}
+
+    got = checked("text_fingerprint", lambda: sorted(
+        tuple(r) for r in QUERIES["text_fingerprint"](spark, str(tmp_path)).collect()
+    ))
+    assert got == oracle_rows("text_fingerprint")
+    con.close()
 
 
 # ---------------------------------------------------------------------------

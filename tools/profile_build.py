@@ -3,8 +3,11 @@
 For each query: time the DataFrame CONSTRUCTION (QUERIES[name] call),
 then the action (count), warm (second build+run reported). Counts py4j
 round trips during the warm build by monkeypatching
-ClientServerConnection.send_command. Guide §1: attribute wall time to
-driver plan work vs executor work before touching anything.
+ClientServerConnection.send_command, and the Spark jobs the warm build
+submits (eager localCheckpoint / probe jobs, which build_s includes)
+from statusTracker under a per-query job group. Attribute wall time to
+driver plan work vs eager jobs vs executor work before touching
+anything.
 
 Usage: python tools/profile_build.py [query ...]  (default: bench list)
 """
@@ -44,7 +47,11 @@ def main() -> None:
     _load(spark, sf_dir, "events").count()
     install_counter()
 
-    print(f"{'query':28s} {'build_s':>8s} {'exec_s':>8s} {'total':>8s} {'trips':>7s}")
+    sc = spark.sparkContext
+    print(
+        f"{'query':28s} {'build_s':>8s} {'exec_s':>8s} {'total':>8s} "
+        f"{'trips':>7s} {'jobs':>5s}"
+    )
     import gc
 
     for name in names:
@@ -53,18 +60,22 @@ def main() -> None:
         df = fn(spark, sf_dir)
         df.count()
         gc.collect()
+        group = f"profile_build {name}"
+        sc.setJobGroup(group, f"warm build of {name}")
         t0 = time.perf_counter()
         n0 = TRIPS["n"]
         df = fn(spark, sf_dir)
         t_build = time.perf_counter() - t0
         trips = TRIPS["n"] - n0
+        sc.setJobGroup("", "")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         t1 = time.perf_counter()
         df.count()
         t_exec = time.perf_counter() - t1
         gc.collect()
         print(
             f"{name:28s} {t_build:8.3f} {t_exec:8.3f} "
-            f"{t_build + t_exec:8.3f} {trips:7d}"
+            f"{t_build + t_exec:8.3f} {trips:7d} {jobs:5d}"
         )
 
 

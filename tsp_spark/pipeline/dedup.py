@@ -312,16 +312,8 @@ def _jaccard_pairs_prefix(
     the trade is the same one the PPJoin literature makes (materialize
     the sorted token lists once): one write of the tokenized corpus
     replaces two extra full scans + tokenizations, at the documented
-    localCheckpoint executor-loss cost (compiler.py:595 note).
-
-    r15 (guide §2.5/§6): the tokenize projection runs through
-    ``spread_small_scan`` — a 0.6 MB compressed corpus file scans as
-    ONE task, serializing the split+hash+distinct CPU over a single
-    core (and pinning the checkpointed table at 1 partition, so every
-    downstream map side inherits the serialization); no-op at scale."""
-    from tsp_spark.pipeline.layout import spread_small_scan
-
-    t = spread_small_scan(df).select(
+    localCheckpoint executor-loss cost (compiler.py:595 note)."""
+    t = df.select(
         *bucket_cols,
         F.col(id_col).alias("__id"),
         _token_set(F.col(text_col)).alias("__ws"),
@@ -898,14 +890,7 @@ def _minhash_bands(
         f"CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT), "
         f"{_MERSENNE}))"
     )
-    # r15 (guide §2.5/§6): per-token md5 + shingle arithmetic is the
-    # operator's CPU core — don't run it on the 1-task scan of a small
-    # compressed corpus file (no-op at scale)
-    from tsp_spark.pipeline.layout import spread_small_scan
-
-    with_th = spread_small_scan(df).selectExpr(
-        f"`{id_col}` AS __id", f"{th_sql} AS __th"
-    )
+    with_th = df.selectExpr(f"`{id_col}` AS __id", f"{th_sql} AS __th")
     acc = "__th"
     for j in range(1, shingle_k):
         # zip_with pads to the longer side with NULLs → trailing
@@ -998,13 +983,10 @@ def simhash_pairs(
             f"max_hamming ({max_hamming}) must be < bands ({bands}) or the "
             f"band join loses recall (pigeonhole needs one untouched band)"
         )
-    from tsp_spark.pipeline.layout import spread_small_scan
     from tsp_spark.pipeline.text import token_hashes_col
 
     w = bits // bands
-    # r15 (guide §2.5/§6): spread the per-token md5 pipeline off the
-    # single-task scan a small compressed corpus file produces
-    hashed = spread_small_scan(df).select(
+    hashed = df.select(
         F.col(id_col).alias("__id"),
         token_hashes_col(text_col, bits).alias("__th"),
     )

@@ -1436,14 +1436,8 @@ def q_text_fingerprint(spark, sf_dir):
     # read their base 2-3× internally). One narrow (doc_id, text)
     # materialization feeds every variant: 21 corpus scans -> 1 scan +
     # local re-reads, the dominant I/O term for this fold at scale.
-    # r15 (guide §2.5/§6): spread the 1-task small-file scan first so
-    # the checkpointed base — and every variant's tokenize/gram map
-    # side reading it — isn't pinned at one partition (no-op at scale).
-    from tsp_spark.pipeline.layout import spread_small_scan
-
-    docs = spread_small_scan(
-        _load(spark, sf_dir, "documents").select("doc_id", "text")
-    ).localCheckpoint()
+    docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.localCheckpoint()
     # (r14, guide §5.3: the variant selects build as selectExpr strings
     # — same parsed expressions, a fraction of the py4j round trips)
     fp = fingerprint(docs, "text", "doc_id").selectExpr(

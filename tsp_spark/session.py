@@ -18,6 +18,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Get or create the session with the defaults below.
+
+    ``SPARK_GRAFT_CPUS`` (cores, default 32) and ``TSP_SPARK_DRIVER_MEM``
+    (default 8g) are deployment settings read from the environment; every
+    other setting is a constant here. Tuning overrides go through
+    ``extra_conf``: it is applied after the defaults and before
+    ``getOrCreate``, so when this call creates the session it also sets
+    static confs such as ``spark.python.sql.dataFrameDebugging.enabled``.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     # On local[N] one JVM does everything; shuffle partitions should match
@@ -47,10 +56,7 @@ def get_spark(
         # adapts to the session's core count instead of pinning a
         # partition count, and advisory-sized large shuffles at
         # production scale are unaffected.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("TSP_SPARK_MIN_PARTITION_SIZE", "16k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # r14: PySpark 4's DataFrame debugging captures a Python call
@@ -60,11 +66,8 @@ def get_spark(
         # (the 7-pattern compile makes ~3k such calls per run). Off by
         # default here; errors lose only the Python-side call-site
         # enrichment (JVM stack traces are unaffected). Static conf —
-        # set TSP_SPARK_DF_DEBUG=true to re-enable when debugging.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("TSP_SPARK_DF_DEBUG", "false"),
-        )
+        # pass it as "true" in extra_conf to re-enable when debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("TSP_SPARK_DRIVER_MEM", "8g"))
         # r14: Spark's ContextCleaner frees dead shuffle files, broadcast
@@ -77,10 +80,7 @@ def get_spark(
         # while the same legs standalone match their round-over-round
         # baselines). 2 min bounds the garbage window; a driver full GC
         # on an idle 8 GB heap costs ~100 ms.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("TSP_SPARK_PERIODIC_GC", "2min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
